@@ -1,52 +1,22 @@
 package graft
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  // Full-row consumption, NOT count(): under a count Catalyst prunes
+  // unreferenced projections, so scan-shaped queries would measure
+  // less than the work they declare. foreach over the InternalRow
+  // RDD evaluates every output column on the executors with zero
+  // driver materialization.
+  def consume(df: DataFrame): Unit =
+    df.queryExecution.toRdd.foreach(_ => ())
+
   def main(args: Array[String]): Unit = {
     // ambient machine load BEFORE this run adds its own — the value
     // that explains "same code, different numbers" across machines
     val loadAtStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate + filter pushdown re-evaluates the
-      // GENERATOR expression inside the scan filter: every
-      // explode-based training featurize (char_ngrams_utf8,
-      // dsir_feature_buckets, transition pairs) ran twice per row
-      // (r14; plan excerpt in OPTIMIZATION_r14.md). The inferred
-      // size()>0 filter only saves empty-row Generate machinery
-      // here (explodes sit directly on scans), so it is a strict
-      // loss at any scale for expensive generators.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // experiment knob (r14, default OFF): AQE replanning of cache
-      // materialization coalesces model-sized caches (helps compile-
-      // heavy queries ~0.5 s) but ALSO coalesces corpus-proportional
-      // caches at sf0.1 (dedup shingle tables, LM scored tables) and
-      // costs their downstream stages parallelism — measured net
-      // wash-to-negative (BenchOne A/B in OPTIMIZATION_r14.md), so
-      // the model-table fix is the surgical repartition(1) in the
-      // compile paths instead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Full-row consumption, NOT count(): under a count Catalyst prunes
-    // unreferenced projections, so scan-shaped queries would measure
-    // less than the work they declare. foreach over the InternalRow
-    // RDD evaluates every output column on the executors with zero
-    // driver materialization.
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.toRdd.foreach(_ => ())
+    val spark = GraftSession()
     // A query that throws must NEVER be recorded as a (tiny) timing —
     // a fail-fast AnalysisException would silently flatter the total.
     // Failures drop out of `results` and surface as "errors":N in the
@@ -58,15 +28,12 @@ object Bench {
     // warmup pass: JIT + codegen + broadcast warm, parquet footer
     // cache — then measure steady-state (what a resident service on
     // a cluster actually runs at).
-    // local profiling aid: skip the full query loop to iterate on the
-    // CDC throughput section alone (driver runs always time everything)
-    val skipQueries = sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")
     // name-sorted: a HashMap's iteration order varies with the key
     // set, so adding ONE query would otherwise reshuffle every
     // query's GC/cache neighborhood and make per-query timings
     // incomparable across rounds
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    if (!skipQueries) ordered.foreach { case (_, fn) =>
+    ordered.foreach { case (_, fn) =>
       try consume(fn(spark, sfDir)) catch { case _: Throwable => }
     }
     // Per-query System.gc() + MEDIAN-of-3 (was min-of-2): the r5
@@ -81,7 +48,7 @@ object Bench {
     // allocation, and the median survives one bad sample where min
     // survives zero.
     def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+        fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       try { consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
       catch { case e: Throwable =>
@@ -93,13 +60,11 @@ object Bench {
     // and (max-min)/median is the NOISE marker — a one-shot outlier
     // under driver contention shows as high spread with a normal
     // median, where a real plan regression moves the median itself
-    val samples =
-      if (skipQueries) Map.empty[String, Seq[Double]]
-      else ordered.flatMap { case (name, fn) =>
-        System.gc()
-        val ts = (1 to 3).flatMap(_ => timeOnce(name, fn))
-        if (ts.size == 3) Some(name -> ts.sorted) else None
-      }.toMap
+    val samples = ordered.flatMap { case (name, fn) =>
+      System.gc()
+      val ts = (1 to 3).flatMap(_ => timeOnce(name, fn))
+      if (ts.size == 3) Some(name -> ts.sorted) else None
+    }.toMap
     var results = samples.map { case (k, ts) => k -> ts(1) }
     var spreads = samples.map { case (k, ts) =>
       k -> (if (ts(1) > 0) (ts(2) - ts(0)) / ts(1) else 0.0) }
@@ -142,60 +107,16 @@ object Bench {
     // directly against the reference envelope floor (~3,400
     // rows/s/table derived from its batch constants, BASELINE.md).
     val (cdcRows, cdcRowsPerSec) = try {
-      import org.apache.spark.sql.functions._
-      import graft.meta.{ColumnDef, TableDef}
       val tmp = java.nio.file.Files.createTempDirectory("graft-bench-cdc")
       val logDir = tmp.resolve("log").toString
-      // ts → Long ns regardless of the parquet encoding (the driver
-      // has shipped both int64-nanos and timestamp[us] — see
-      // Tables.normalizeTsNs)
-      val ev = Tables.normalizeTsNs(spark.read.parquet(s"$sfDir/events.parquet"))
-      val n = ev.count()
-      // one sorted range-partitioned file per shard: seqs must be
-      // monotone WITHIN a file (the source's early-stop contract for
-      // append-only shard files)
-      ev.select(col("event_id").as("seq"), to_json(struct(
-          lit("app").as("db"), lit("events").as("table"),
-          lit("insert").as("op"),
-          expr("ts div 1000000").as("ts"),
-          concat(lit("gtid:"), col("event_id")).as("pos"),
-          col("event_id").as("seq"), lit(0).as("tableVersion"),
-          map(lit("event_id"), col("event_id").cast("string"),
-            lit("user_id"), col("user_id").cast("string"),
-            lit("event_type"), col("event_type"),
-            lit("value"), col("value").cast("string")).as("after")))
-          .as("value"))
-        .repartitionByRange(8, col("seq")).sortWithinPartitions(col("seq"))
-        .select(col("value")).write.mode("overwrite").text(logDir)
-      val dir = java.nio.file.Paths.get(logDir)
-      java.nio.file.Files.list(dir).iterator().asScala
-        .filter(_.toString.endsWith(".txt")).foreach { p =>
-          java.nio.file.Files.move(p,
-            p.resolveSibling(p.getFileName.toString + ".jsonl"))
-        }
-      val target = TableDef("app", "events", Seq(
-        ColumnDef("event_id", "bigint", isPrimaryKey = true),
-        ColumnDef("user_id", "bigint"),
-        ColumnDef("event_type", "varchar(32)"),
-        ColumnDef("value", "double")))
+      val n = CdcDrainMain.writeLog(spark, sfDir, logDir, 8)
       // same steady-state methodology as the query side (warmup +
       // min-of-two): the first drain pays one-off streaming-engine
       // init + FS cache warm; a resident pipeline never does
-      def drain(tag: String): Option[Double] = {
-        val sinkDir = tmp.resolve(s"sink-$tag").toString
-        val ckpt = tmp.resolve(s"ckpt-$tag").toString
-        val t0 = System.nanoTime()
-        val q = graft.streaming.Pipeline.start(
-          spark.readStream.format("graft-changelog").option("path", logDir).load(),
-          Seq(graft.streaming.Pipeline.Route("app", "events", target)),
-          new graft.sinks.ParquetUpsertSink(sinkDir), ckpt,
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        val finished = q.awaitTermination(600000)
-        // a timed-out pipeline processed only part of the log — n/secs
-        // would overstate throughput exactly when it is slowest
-        if (finished) Some((System.nanoTime() - t0) / 1e9) else None
-      }
+      def drain(tag: String) = CdcDrainMain.drain(spark, logDir, tmp, tag)
       drain("warmup")
+      // a timed-out drain processed only part of the log — n/secs
+      // would overstate throughput exactly when it is slowest
       (drain("m1"), drain("m2")) match {
         case (Some(a), Some(b)) => (n, n / math.min(a, b))
         case _ => (n, -1.0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.ops.TableChecksum
@@ -56,14 +56,7 @@ object ChecksumMain {
     require(args.length >= 4,
       "usage: ChecksumMain <parquetA> <parquetB> <pkCol> <chunkSize> " +
         "[col1,col2,…]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val (divergent, cols) = run(
       spark.read.parquet(args(0)), spark.read.parquet(args(1)),
       args(2), args(3).toLong, args.lift(4))

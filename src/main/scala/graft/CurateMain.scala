@@ -328,9 +328,7 @@ object CurateMain {
       val dir = args.sliding(2).collectFirst {
         case Array("--compact-index", d) if !d.startsWith("--") => d
       }.getOrElse(sys.error("--compact-index requires an index directory"))
-      val spark = SparkSession.builder()
-        .master(sys.props.getOrElse("spark.master", "local[*]"))
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession(extra = GraftSession.cli)
       try {
         val kind = compactAnyIndex(spark, dir)
         // escape: the dir is user input inside a JSON-line contract
@@ -342,19 +340,7 @@ object CurateMain {
     val configPath = args.sliding(2).collectFirst {
       case Array("--config", p) => p
     }.getOrElse(sys.error("required: --config <curate.toml>"))
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // inferred generate-filters duplicate expensive generators
-      // (r14, see Bench)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(extra = GraftSession.cli)
     try {
       val configText = Files.readString(Paths.get(configPath))
       // --retrain: model-backed stages with a model-dir train from

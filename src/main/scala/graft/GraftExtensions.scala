@@ -7,15 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BmpFixture, BmpStats, BpeEncode, BpeMergeStep, BpeTokenCount, ByteAtU8, ByteStats, CharNgramsUtf8, ChunkHash60, DotProduct, DsirFeatureBuckets, DsirScore, FlacFixture, FlacMeta, GifFixture, GifStats, HtmlText, JpegFixture, JpegStats, JsonbDecode, LmScore2, LmScore3, Md5Hash60, MapChangedKeys, Mp3Fixture, Mp3Meta, Mp4Fixture, Mp4Meta, MultiMatch, MultiMatchAny, NbScore, NfcNormalize, PngFixture, PngStats, PpmStats, RollingHash, ShingleHash64, ShingleUtf8, Sum128, TarEntries, TarFixture, TiffFixture, TiffStats, TokenWindowHash64, TopKLargest, TopKPairs, WarcFixture, WarcRecords, WavRms}
 
 /** SparkSessionExtensions entry point — the engine's custom Catalyst
-  * surface (SURVEY §7.4). Enable with:
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  * or `.withExtensions(new GraftExtensions)` — or, for a session that
-  * already exists (a host application the library is dropped into),
-  * [[GraftExtensions.ensure]] registers the same functions
-  * imperatively and idempotently.
+  * surface (SURVEY §7.4). Enabled by the conf
+  * `spark.sql.extensions=graft.GraftExtensions` ([[GraftSession]]
+  * sets it) or `.withExtensions(new GraftExtensions)` — or, for a
+  * session that already exists (a host application the library is
+  * dropped into), [[GraftExtensions.ensure]] registers the same
+  * functions imperatively and idempotently.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

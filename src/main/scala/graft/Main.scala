@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.PipelineConfig
@@ -66,20 +65,11 @@ object Main {
     val conf = PipelineConfig.fromToml(
       new String(Files.readAllBytes(Paths.get(configPath)), "UTF-8"))
 
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("master",
-        sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("graft-cdc")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // inferred generate-filters duplicate expensive generators
-      // (r14, see Bench)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(opts.getOrElse("log-level", "WARN"))
+    // an explicit --master flag replaces the launcher's master
+    opts.get("master").foreach(sys.props("spark.master") = _)
+    val spark = GraftSession(extra = GraftSession.cli :+
+      ("spark.app.name" -> "graft-cdc"))
+    opts.get("log-level").foreach(spark.sparkContext.setLogLevel)
 
     // schema snapshot load (≙ LoadMeta): DDL script through the
     // engine's own MySQL-dialect parser

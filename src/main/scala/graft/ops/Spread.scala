@@ -51,14 +51,18 @@ object Spread {
 
   /** Estimated scan task count of a single-relation frame, from file
     * sizes alone (analysis-only — no physical planning, no jobs).
-    * None when the frame is not one file-backed scan. */
+    * None when the frame is not one unpartitioned, unbucketed
+    * file-backed scan: partition pruning shrinks the split size and
+    * buckets fix the task count, so the full-listing estimate could
+    * undercount such a scan and the widen would COALESCE it. */
   private def estimatedScanSplits(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val rels = df.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation
     }
     rels match {
-      case Seq(fs: HadoopFsRelation) =>
+      case Seq(fs: HadoopFsRelation)
+          if fs.partitionSchema.isEmpty && fs.bucketSpec.isEmpty =>
         val conf = df.sparkSession.sessionState.conf
         val open = conf.filesOpenCostInBytes
         val maxPB = conf.filesMaxPartitionBytes

@@ -5,25 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    // match the mains (r14): inferred generate-filters re-evaluate
-    // expensive generator expressions in scan filters — excluded
-    // everywhere so the suite pins the same plans the bench runs
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+  // local[4] whatever $SPARK_GRAFT_CPUS says: the suite pins partition
+  // counts and plans, so it must not vary with the box
+  lazy val spark: SparkSession = GraftSession("4", Seq(
     // bucketed-table tests register external tables; keep catalog
     // metadata out of the repo tree
-    .config("spark.sql.warehouse.dir",
-      System.getProperty("java.io.tmpdir") + "/graft-test-warehouse")
-    .getOrCreate()
+    "spark.sql.warehouse.dir" ->
+      (System.getProperty("java.io.tmpdir") + "/graft-test-warehouse")))
 
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -63,13 +63,14 @@ class ComponentsSpec extends SparkSpec {
     assert(star == minLabel)
   }
 
-  test("r15 batched star rounds ≡ min-label across seeds, densities " +
-    "and odd/even convergence counts") {
-    // the r15 loop runs TWO star rounds per checkpoint+probe; the
-    // star forest of component minima is the unique fixpoint, so
-    // batching must not change any label — pinned against min-label
-    // propagation over graph shapes that converge after odd AND even
-    // round counts (sparse chains ∪ dense blobs ∪ isolated loops)
+  test("star rounds ≡ min-label across seeds, densities and odd/even " +
+    "convergence counts") {
+    // the loop runs one star round per checkpoint + one-aggregate
+    // violation probe; the star forest of component minima is the
+    // unique fixpoint, so the probe must stop on it — pinned against
+    // min-label propagation over graph shapes that converge after odd
+    // AND even round counts (sparse chains ∪ dense blobs ∪ isolated
+    // loops)
     for (seed <- Seq(1, 7, 13, 29); n <- Seq(17, 40)) {
       val rnd = new scala.util.Random(seed)
       val dense = Seq.fill(3 * n)(
@@ -85,10 +86,10 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  test("r15 batched star: odd maxIter still converges (single-round " +
-    "tail batch)") {
-    // maxIter=1 forces the doTwo=false path: a 2-vertex edge is a
-    // star forest after one round, so it must converge, not throw
+  test("star variant: maxIter=1 converges when one round yields a " +
+    "star forest") {
+    // a 2-vertex edge is a star forest after one round: the probe of
+    // that same round must detect it, not throw at the round limit
     val pairs = Seq((7L, 3L)).toDF("a", "b")
     val out = Components.connectedComponentsStar(pairs, "a", "b",
       maxIter = 1).as[(Long, Long)].collect().sortBy(_._1).toSeq

@@ -38,15 +38,22 @@ class SpreadSpec extends SparkSpec {
 
   test("auto never coalesces: a frame already at/above the target " +
     "passes through") {
-    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001",
-      "documents")
-    // force a wide repartition BELOW auto: the estimate probes the
-    // SCAN's split count, which is below target, so auto would widen
-    // — but the contract only promises never to coalesce, so assert
-    // on the repartitioned frame's floor
-    val wide = Spread.auto(docs).repartition(
-      spark.sparkContext.defaultParallelism)
-    assert(wide.rdd.getNumPartitions >=
-      math.max(1, spark.sparkContext.defaultParallelism / 2))
+    // eight files: the scan itself already runs at least `target` tasks
+    val dir = java.nio.file.Files.createTempDirectory("spread-wide").toString
+    spark.range(0, 4000).repartition(8).write.mode("overwrite").parquet(dir)
+    val wide = spark.read.parquet(dir)
+    val target = math.max(1, spark.sparkContext.defaultParallelism / 2)
+    assert(wide.rdd.getNumPartitions >= target)
+    assert(Spread.auto(wide) eq wide)
+  }
+
+  test("auto passes a partitioned relation through: its split count " +
+    "is not estimated") {
+    // one small file — an unpartitioned scan of it would be widened
+    val dir = java.nio.file.Files.createTempDirectory("spread-part").toString
+    spark.range(0, 100).withColumn("p", lit(1)).coalesce(1)
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    val parts = spark.read.parquet(dir)
+    assert(Spread.auto(parts) eq parts)
   }
 }

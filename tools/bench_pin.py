@@ -13,7 +13,8 @@ BENCH_PIN.json:
 
   * model_* queries: >1.5x the pin is a CANDIDATE failure. Before
     exiting 1 the tool AUTO-ESCALATES to a clean re-measure
-    (graft.TimeQ min-of-two over exactly the failing queries) and
+    (graft.BenchOne warmup + min-of-two over exactly the failing
+    queries) and
     only a re-measure still over the ratio fails. Rationale (r13
     verdict "What's wrong #1"): the spread test alone cannot tell
     sustained ambient load from a plan regression — a uniformly
@@ -30,9 +31,10 @@ BENCH_PIN.json:
 
 --no-remeasure restores the old behavior (candidate failures exit 1
 immediately) for contexts without sbt. BENCH_PIN_TIMEQ_CMD overrides
-the re-measure command (the selftest injects a scripted TimeQ); it
-receives the sf dir and the failing query names as arguments and
-must print `TIMEQ <name> <seconds>` lines.
+the re-measure command (the selftest injects a scripted BenchOne); it
+receives the failing query names and the rep count 2 as arguments,
+SPARK_GRAFT_SF_DIR in its environment, and must print BenchOne's
+JSON lines (`{"query": <name>, ..., "min": <seconds>, ...}`).
 
 Adjudication history lives next to the pin in
 BENCH_PIN_ADJUDICATIONS.md — refresh the pin only for an ACCEPTED
@@ -43,7 +45,6 @@ deliberate, committed act rather than a silent drift.
 """
 import json
 import os
-import re
 import subprocess
 import sys
 
@@ -59,31 +60,33 @@ def load(path):
 
 
 def remeasure(names, sf_dir):
-    """Clean re-measure of `names` via graft.TimeQ (warmup +
-    min-of-two per query; the first query also absorbs JVM warmup).
-    Returns {name: seconds} for every TIMEQ line found; an empty
-    dict (command failed / nothing parsed) leaves the candidate
-    failures standing — the escalation can only DOWNGRADE with
-    actual evidence."""
+    """Clean re-measure of `names` via graft.BenchOne with 2 reps
+    (warmup + min-of-two per query). Returns {name: seconds} for
+    every BenchOne line found; an empty dict (command failed /
+    nothing parsed) leaves the candidate failures standing — the
+    escalation can only DOWNGRADE with actual evidence."""
     override = os.environ.get("BENCH_PIN_TIMEQ_CMD")
     if override:
-        cmd = override.split() + [sf_dir] + names
+        cmd = override.split() + names + ["2"]
     else:
         cmd = ["sbt", "-batch",
-               "runMain graft.TimeQ " + " ".join([sf_dir] + names)]
+               "runMain graft.BenchOne " + " ".join(names + ["2"])]
     print(f"escalating {len(names)} candidate failure(s) to a clean "
           f"re-measure: {' '.join(cmd[:3])} ...")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     try:
         out = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=1800).stdout
+                             timeout=1800, env=env).stdout
     except (OSError, subprocess.TimeoutExpired) as e:
         print(f"re-measure failed to run ({e}); candidates stand")
         return {}
     got = {}
-    for m in re.finditer(r"TIMEQ (\S+) ([0-9.]+)", out):
-        got[m.group(1)] = float(m.group(2))
+    for line in out.splitlines():
+        if line.startswith('{"query"'):
+            r = json.loads(line)
+            got[r["query"]] = float(r["min"])
     if not got:
-        print("re-measure produced no TIMEQ lines; candidates stand")
+        print("re-measure produced no BenchOne lines; candidates stand")
     return got
 
 
@@ -146,7 +149,7 @@ def main(argv):
         for n, now, ref, line in to_measure:
             if spread.get(n, 0.0) > NOISE_SPREAD:
                 print(f"NOISY {line} — over pin but spread marks "
-                      "contention; re-measure (TimeQ) before accepting")
+                      "contention; re-measure (BenchOne) before accepting")
             else:
                 failures.append(line)
     elif to_measure:

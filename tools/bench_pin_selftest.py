@@ -16,12 +16,15 @@ import tempfile
 HERE = os.path.dirname(os.path.abspath(__file__))
 PIN_TOOL = os.path.join(HERE, "bench_pin.py")
 
-FAKE_TIMEQ = """\
-import sys
-# argv: <seconds> <sf_dir> <query...> -> one TIMEQ line per query
+FAKE_BENCHONE = """\
+import json, os, sys
+# argv: <seconds> <query...> <reps> -> one BenchOne line per query
 sec = float(sys.argv[1])
-for name in sys.argv[3:]:
-    print(f"TIMEQ {name} {sec:.3f}")
+for name in sys.argv[2:-1]:
+    print(json.dumps({"query": name, "reps": int(sys.argv[-1]),
+                      "min": sec, "median": sec, "max": sec,
+                      "sf": os.environ["SPARK_GRAFT_SF_DIR"]},
+                     separators=(",", ":")))
 """
 
 
@@ -35,9 +38,9 @@ def run_case(tmp, dump, pin, spread, timeq_sec, extra_args=()):
         json.dump(pin, f)
     with open(sp, "w") as f:
         json.dump(spread, f)
-    fake = os.path.join(tmp, "fake_timeq.py")
+    fake = os.path.join(tmp, "fake_benchone.py")
     with open(fake, "w") as f:
-        f.write(FAKE_TIMEQ)
+        f.write(FAKE_BENCHONE)
     env = dict(os.environ)
     if timeq_sec is not None:
         env["BENCH_PIN_TIMEQ_CMD"] = \
